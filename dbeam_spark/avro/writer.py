@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame
 
 _MAGIC = b"Obj\x01"
 _BLOCK_ROWS = 4096
-_NULL_MASK = "__dbeam_isnull__"
 
 # Guards the session-conf save/flip/restore window in write_avro
 # against concurrent writers on the same SparkSession (see the
@@ -119,21 +118,14 @@ def _make_cell_encoder(avro_type):
     raise ValueError(f"Unsupported Avro type: {avro_type!r} (logical={logical})")
 
 
-def _normalize_series(s, avro_type, null_mask=None):
+def _normalize_series(s, avro_type):
     """pandas Series → list of python scalars matching the Avro type
-    (timestamps → epoch millis, like dbeam's JdbcAvroRecord).
-
-    `null_mask` (bool series) marks SQL NULLs for float/double columns:
-    Arrow→pandas collapses NULL and NaN into NaN, but dbeam writes NULL
-    as Avro null and NaN as a real double (JdbcAvroRecord reads
-    getDouble + wasNull), so the writer carries the mask explicitly."""
+    (timestamps → epoch millis, like dbeam's JdbcAvroRecord)."""
     import pandas as pd
 
     t = avro_type
     if isinstance(t, dict) and "logicalType" in t:
         t = t["type"]
-    if null_mask is not None:
-        return [None if m else v for v, m in zip(s, null_mask)]
     if pd.api.types.is_datetime64_any_dtype(s.dtype):
         ms = s.astype("int64") // 1_000_000  # ns → ms
         return [None if pd.isna(v) else int(m) for v, m in zip(s, ms)]
@@ -160,17 +152,6 @@ def _normalize_series(s, avro_type, null_mask=None):
         else:
             out.append(v)
     return out
-
-
-# Length-prefix table (union marker + zigzag(len)) for short strings.
-_LEN_PREFIX = None
-
-
-def _len_prefix_table():
-    global _LEN_PREFIX
-    if _LEN_PREFIX is None:
-        _LEN_PREFIX = [b"\x02" + _zigzag(n) for n in range(4096)]
-    return _LEN_PREFIX
 
 
 def _varint_cells(vals, null):
@@ -227,70 +208,12 @@ def _fixed_cells(vals, null, width, dtype_code):
     return [raw[a:b] for a, b in zip(offs.tolist(), ends.tolist())]
 
 
-def _column_cells(s, avro_type, null_mask):
-    """Per-cell encoded bytes (incl. union branch) for one column, or
-    None if this column needs the scalar fallback path."""
-    import numpy as np
-    import pandas as pd
-
-    t = avro_type
-    if isinstance(t, dict) and "logicalType" in t:
-        t = t["type"]
-    dt = s.dtype
-    if t in ("long", "int"):
-        if pd.api.types.is_datetime64_any_dtype(dt):
-            null = pd.isna(s).to_numpy()
-            ms = s.astype("int64").to_numpy() // 1_000_000
-            return _varint_cells(ms, null)
-        if dt in (np.int64, np.int32, np.int16, np.int8):
-            vals = s.to_numpy().astype(np.int64)
-            return _varint_cells(vals, np.zeros(len(vals), dtype=bool))
-        if dt in (np.float64, np.float32):  # nullable ints via NaN
-            null = np.isnan(s.to_numpy())
-            vals = np.nan_to_num(s.to_numpy()).astype(np.int64)
-            return _varint_cells(vals, null)
-        return None
-    if t == "double" and dt == np.float64:
-        null = (
-            null_mask.to_numpy()
-            if null_mask is not None
-            else np.zeros(len(s), dtype=bool)
-        )
-        return _fixed_cells(s.to_numpy(), null, 8, "<f8")
-    if t == "float" and dt in (np.float32, np.float64):
-        null = (
-            null_mask.to_numpy()
-            if null_mask is not None
-            else np.zeros(len(s), dtype=bool)
-        )
-        return _fixed_cells(s.to_numpy(), null, 4, "<f4")
-    if t == "boolean" and dt == np.bool_:
-        lut = (b"\x02\x00", b"\x02\x01")
-        return [lut[v] for v in s.to_numpy().astype(np.uint8).tolist()]
-    if t == "string":
-        table = _len_prefix_table()
-        cells = []
-        for v in s:
-            if v is None or (isinstance(v, float) and v != v):
-                cells.append(b"\x00")
-                continue
-            e = (v if isinstance(v, str) else str(v)).encode("utf-8")
-            ln = len(e)
-            cells.append(
-                (table[ln] if ln < 4096 else b"\x02" + _zigzag(ln)) + e
-            )
-        return cells
-    return None
-
-
-# ------------------------------------------------------- arrow fast path
+# ------------------------------------------------------- arrow cells
 #
 # Cell encoders that read Arrow buffers directly (validity bitmap +
-# data/offset buffers) instead of going through pandas. Two wins over
-# the pandas path: (1) no Arrow→pandas conversion per batch, and
-# (2) SQL NULL vs float NaN is distinguished natively by the validity
-# bitmap, so the _NULL_MASK projection the pandas path needs for
-# double/float columns disappears entirely.
+# data/offset buffers): no Arrow→pandas conversion per batch, and SQL
+# NULL vs float NaN comes straight from the validity bitmap (dbeam
+# writes NULL as Avro null and NaN as a real double).
 
 
 def _arrow_null_mask(arr):
@@ -375,7 +298,7 @@ def _varlen_cells(offs, data, null):
 _TS_DIVISOR = {"s": None, "ms": 1, "us": 1_000, "ns": 1_000_000}
 
 
-def _arrow_column_cells(arr, avro_type):
+def _arrow_cells(arr, avro_type):
     """Per-cell encoded bytes for one Arrow array, or None if this
     column needs the scalar fallback path (arrays, decimals, ...)."""
     import numpy as np
@@ -520,55 +443,15 @@ class OcfEncoder:
         buf += self.sync
         return bytes(buf)
 
-    def encode_pdf(self, pdf, null_masks=None) -> Iterator[bytes]:
-        """Yield OCF blocks straight from a pandas DataFrame.
-
-        Vectorized fast path: each column becomes a list of pre-encoded
-        cell byte strings (numpy varint/IEEE assembly — ~5× less CPU
-        than the per-cell scalar encoders), rows are assembled with one
-        C-level join per block. Columns the vectorizer doesn't cover
-        (arrays, bytes, object-dtype dates) fall back to the scalar
-        encoder per column — semantics identical either way.
-
-        `null_masks` maps float/double field names to boolean Series
-        marking SQL NULLs (Arrow→pandas collapses NULL and NaN; dbeam
-        writes NULL as Avro null but NaN as a real double)."""
-        from itertools import chain
-
-        null_masks = null_masks or {}
-        names = [f["columnName"] for f in self.schema["fields"]]
-        cols = []
-        for name, t, enc in zip(names, self._field_types, self._encoders):
-            cells = _column_cells(pdf[name], t, null_masks.get(name))
-            if cells is None:  # scalar fallback for this column only
-                cells = [
-                    b"\x00" if v is None else b"\x02" + enc(v)
-                    for v in _normalize_series(
-                        pdf[name], t, null_masks.get(name)
-                    )
-                ]
-            cols.append(cells)
-        n = len(pdf)
-        for start in range(0, n, _BLOCK_ROWS):
-            end = min(start + _BLOCK_ROWS, n)
-            block = b"".join(
-                chain.from_iterable(
-                    zip(*(c[start:end] for c in cols))
-                )
-            )
-            data = self._compress(block)
-            yield _zigzag(end - start) + _zigzag(len(data)) + data + self.sync
-
     def encode_batch(self, rb) -> Iterator[bytes]:
         """Yield OCF blocks straight from an Arrow RecordBatch.
 
-        Fastest path: cells are built from Arrow buffers (validity
-        bitmap + data/offset arrays) with no pandas conversion and no
-        per-cell Python objects for fixed-width and string/binary
-        columns. SQL NULL vs float NaN comes from the validity bitmap,
-        so no external null mask is needed. Columns the Arrow
-        vectorizer doesn't cover (arrays, decimals) fall back to the
-        scalar encoder via to_pylist — semantics identical."""
+        Cells are built from Arrow buffers (validity bitmap +
+        data/offset arrays) with no pandas conversion and no per-cell
+        Python objects for fixed-width and string/binary columns; rows
+        are assembled with one C-level join per block. Columns the
+        Arrow vectorizer doesn't cover (arrays, decimals) fall back to
+        the scalar encoder per column — semantics identical."""
         from itertools import chain
 
         idx = {n: i for i, n in enumerate(rb.schema.names)}
@@ -577,7 +460,7 @@ class OcfEncoder:
             self.schema["fields"], self._field_types, self._encoders
         ):
             arr = rb.column(idx[f["columnName"]])
-            cells = _arrow_column_cells(arr, t)
+            cells = _arrow_cells(arr, t)
             if cells is None:  # scalar fallback for this column only
                 import pandas as pd
 

@@ -6,10 +6,10 @@ Scale design (100 TB of documents):
   explosion.
 - n-gram Jaccard: shingle-explode → shingle-join. Exact but the join
   fan-out is O(docs × shingles); the production path is MinHash-LSH.
-- MinHash+LSH: 128 permutations aggregated in ONE shuffle
-  (explode shingles → groupBy doc with 128 mins), then band-bucket
-  self-join on (band, signature) — candidate volume is O(docs × bands)
-  instead of all-pairs — then exact-Jaccard verification restricted to
+- MinHash+LSH: 128 permutation mins per doc computed map-only where
+  the doc row lives (no shingle explode, no shuffle), then ONE groupBy
+  on (band, signature) — candidate volume is O(docs × bands) instead
+  of all-pairs — then exact-Jaccard verification restricted to
   candidates. Precision 1.0 by construction; recall governed by
   (bands, rows) — 32×4 gives P(miss | J≥0.4) < 1e-3 per pair and
   effectively 0 at J≥0.6.
@@ -627,136 +627,60 @@ def exact_jaccard_of_pairs(
     )
 
 
-def minhash_signatures(
-    sh: DataFrame, num_perm: int = _NUM_PERM
-) -> DataFrame:
-    """128 MinHash values per doc: one shuffle on sid, then a numpy
-    partial-min per partition.
-
-    Shingles hash to [0, 2^31) via xxhash64 (JVM-side); the 128
-    permutations (a*x + b) mod 2^31-1 are evaluated as ONE Arrow-
-    batched numpy outer product + grouped min. The pure-Catalyst
-    formulation (128 separate `min(pmod(...))` aggregates) exceeds
-    spark.sql.codegen.maxFields=100, drops to interpreted expression
-    evaluation, and measures ~1.5× slower at sf0.1 (1.5s vs 1.0s) —
-    same cross-over CLAUDE.md records for wide vector math. Values are
-    bit-identical to the expression form (`minhash_signatures_expr`,
-    kept below as the spec)."""
-    import pandas as pd  # noqa: F401 — document worker deps
-
-    a_list, b_list = _PERM_A[:num_perm], _PERM_B[:num_perm]
-    cols = [f"mh{i}" for i in range(num_perm)]
-    schema = "sid long, " + ", ".join(f"{c} long" for c in cols)
-
-    def part(batches):
-        import numpy as np
-        import pandas as pd
-
-        A = np.array(a_list, dtype=np.int64)
-        B = np.array(b_list, dtype=np.int64)
-        acc = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = pdf["x"].to_numpy(dtype=np.int64)
-            # (n × 128) permuted hashes; a*x < 2^62 so int64 is exact
-            H = (x[:, None] * A[None, :] + B[None, :]) % _MERSENNE
-            g = pd.DataFrame(H, columns=cols)
-            g.insert(0, "sid", pdf["sid"].to_numpy())
-            g = g.groupby("sid", sort=False).min()
-            acc = g if acc is None else pd.concat([acc, g]).groupby(level=0).min()
-        if acc is not None:
-            yield acc.reset_index()
-
-    x = F.pmod(F.xxhash64("shingle"), F.lit(2**31)).alias("x")
-    # repartition on sid so the per-partition min IS the global min
-    withx = sh.select("sid", x).repartition("sid")
-    return withx.mapInPandas(part, schema)
-
-
-def minhash_signatures_maponly(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = _NUM_PERM,
-) -> DataFrame:
-    """Per-doc MinHash with ZERO shuffles: tokenize → shingle → hash →
-    128 permuted mins, all inside one Arrow-batched pass over the
-    documents themselves.
-
-    `minhash_signatures` aggregates an exploded shingle stream, which
-    costs a shuffle of O(docs × shingles) rows before the mins can be
-    taken. But a MinHash signature only depends on its OWN doc's
-    shingles — computing it where the doc row already lives turns the
-    signature stage into a map-only scan (the optimal shape at 100 TB:
-    no exchange, no explode, signature volume = doc count). Shingles
-    hash via crc32 (any fixed 31-bit hash works — candidates are
+def _minhash_kernel(n: int):
+    """The per-document MinHash kernel, as a closure the Arrow workers
+    receive by value (so they need not import this package):
+    kernel(ids, texts) lower-cases → whitespace tokens → DISTINCT word
+    n-grams → crc32 (31-bit; any fixed hash works — candidates are
     exact-verified downstream, and the planted-duplicate recall of the
-    32×4 banding is hash-independent)."""
-    a_list, b_list = _PERM_A[:num_perm], _PERM_B[:num_perm]
-    cols = [f"mh{i}" for i in range(num_perm)]
-    schema = "sid long, " + ", ".join(f"{c} long" for c in cols)
+    32×4 banding is hash-independent) → 128 permuted mins
+    (a*x + b) mod 2^31-1. Each doc's 32 band signatures are then mixed
+    numpy-side as an int64-wraparound polynomial over its 4 rows per
+    band (bucket ids are an arbitrary deterministic hash — a grouping
+    key only). Docs with fewer than `n` tokens get no signature.
 
-    def part(batches):
+    kernel returns (sids int64[d], M int64[d, 128], band_sigs
+    int64[d, 32]), or None when no doc in the batch has a signature.
+    Signatures are persisted by `incremental_minhash_index`, so any
+    change here must keep the values bit-identical (tests pin a
+    digest)."""
+
+    def kernel(ids, texts):
         import re
         import zlib
 
         import numpy as np
-        import pandas as pd
 
-        A = np.array(a_list, dtype=np.int64)[None, :]
-        B = np.array(b_list, dtype=np.int64)[None, :]
+        A = np.array(_PERM_A, dtype=np.int64)[None, :]
+        B = np.array(_PERM_B, dtype=np.int64)[None, :]
         ws = re.compile(r"\s+")
-        for pdf in batches:
-            sids, mins = [], []
-            for sid, txt in zip(pdf[id_col], pdf[text_col]):
-                toks = ws.split(txt.lower())
-                if len(toks) < n:
-                    continue
-                grams = {
-                    " ".join(toks[i: i + n])
-                    for i in range(len(toks) - n + 1)
-                }
-                x = np.fromiter(
-                    (zlib.crc32(g.encode()) & 0x7FFFFFFF for g in grams),
-                    dtype=np.int64,
-                    count=len(grams),
-                )
-                mins.append(((x[:, None] * A + B) % _MERSENNE).min(axis=0))
-                sids.append(sid)
-            if sids:
-                out = pd.DataFrame(
-                    np.vstack(mins), columns=cols
-                )
-                out.insert(0, "sid", np.array(sids, dtype=np.int64))
-                yield out
+        sids, mins = [], []
+        for sid, txt in zip(ids, texts):
+            toks = ws.split(txt.lower())
+            if len(toks) < n:
+                continue
+            grams = {
+                " ".join(toks[i: i + n]) for i in range(len(toks) - n + 1)
+            }
+            x = np.fromiter(
+                (zlib.crc32(g.encode()) & 0x7FFFFFFF for g in grams),
+                dtype=np.int64,
+                count=len(grams),
+            )
+            # (grams × 128) permuted hashes; a*x < 2^62 so int64 is exact
+            mins.append(((x[:, None] * A + B) % _MERSENNE).min(axis=0))
+            sids.append(sid)
+        if not sids:
+            return None
+        M = np.vstack(mins)
+        Mb = M.reshape(len(sids), _BANDS, _ROWS_PER_BAND)
+        with np.errstate(over="ignore"):
+            sig = Mb[:, :, 0]
+            for j in range(1, _ROWS_PER_BAND):
+                sig = sig * np.int64(1000003) + Mb[:, :, j]
+        return np.array(sids, dtype=np.int64), M, sig
 
-    from dbeam_spark.operators.util import rebalance_for_arrow
-
-    # one parquet file -> one input split: rebalance so the signature
-    # compute parallelizes (no-op at scale, where splits abound)
-    sel = rebalance_for_arrow(
-        docs.select(F.col(id_col).alias(id_col), F.col(text_col))
-    )
-    return sel.mapInPandas(part, schema)
-
-
-def minhash_signatures_expr(
-    sh: DataFrame, num_perm: int = _NUM_PERM
-) -> DataFrame:
-    """Pure-Catalyst MinHash (the semantic spec for the numpy path —
-    bit-identical output, no Python workers). Slower above ~100
-    permutations because the aggregate exceeds codegen's field limit."""
-    x = F.pmod(F.xxhash64("shingle"), F.lit(2**31)).alias("x")
-    withx = sh.select("sid", x)
-    aggs = [
-        F.min(
-            F.pmod(F.lit(_PERM_A[i]) * F.col("x") + F.lit(_PERM_B[i]), F.lit(_MERSENNE))
-        ).alias(f"mh{i}")
-        for i in range(num_perm)
-    ]
-    return withx.groupBy("sid").agg(*aggs)
+    return kernel
 
 
 def minhash_signatures_with_bands_maponly(
@@ -766,55 +690,24 @@ def minhash_signatures_with_bands_maponly(
     n: int = 3,
 ) -> DataFrame:
     """(sid, mh array<long>[128], bands array<long>[32]) in ONE Arrow
-    pass — the ARRAY layout for signature persistence: a 3-column
-    frame keeps every downstream plan narrow (the 128-individual-
-    column layout costs seconds of driver analysis per plan and holds
-    the estimator in interpreted evaluation), while the band sigs are
-    pre-mixed numpy-side exactly like minhash_band_buckets_maponly."""
-    a_list, b_list = _PERM_A[:_NUM_PERM], _PERM_B[:_NUM_PERM]
+    pass with ZERO shuffles — the ARRAY layout for signature
+    persistence: a 3-column frame keeps every downstream plan narrow
+    (a 128-individual-column layout costs seconds of driver analysis
+    per plan and holds the estimator in interpreted evaluation), and
+    `bands` carries exactly the band signatures
+    `minhash_band_buckets_maponly` emits."""
+    kernel = _minhash_kernel(n)
 
     def part(batches):
-        import re
-        import zlib
-
-        import numpy as np
         import pandas as pd
 
-        A = np.array(a_list, dtype=np.int64)[None, :]
-        B = np.array(b_list, dtype=np.int64)[None, :]
-        ws = re.compile(r"\s+")
-        MIX = np.int64(1000003)
         for pdf in batches:
-            sids, mins = [], []
-            for sid, txt in zip(pdf[id_col], pdf[text_col]):
-                toks = ws.split(txt.lower())
-                if len(toks) < n:
-                    continue
-                grams = {
-                    " ".join(toks[i: i + n])
-                    for i in range(len(toks) - n + 1)
-                }
-                x = np.fromiter(
-                    (zlib.crc32(g.encode()) & 0x7FFFFFFF for g in grams),
-                    dtype=np.int64,
-                    count=len(grams),
-                )
-                mins.append(((x[:, None] * A + B) % _MERSENNE).min(axis=0))
-                sids.append(sid)
-            if not sids:
+            out = kernel(pdf[id_col], pdf[text_col])
+            if out is None:
                 continue
-            M = np.vstack(mins)
-            Mb = M.reshape(len(sids), _BANDS, _ROWS_PER_BAND)
-            with np.errstate(over="ignore"):
-                sig = Mb[:, :, 0]
-                for j in range(1, _ROWS_PER_BAND):
-                    sig = sig * MIX + Mb[:, :, j]
+            sids, M, sig = out
             yield pd.DataFrame(
-                {
-                    "sid": np.array(sids, dtype=np.int64),
-                    "mh": list(M),
-                    "bands": list(sig),
-                }
+                {"sid": sids, "mh": list(M), "bands": list(sig)}
             )
 
     from dbeam_spark.operators.util import rebalance_for_arrow
@@ -831,60 +724,30 @@ def minhash_band_buckets_maponly(
     n: int = 3,
     min_parts: int | None = None,
 ) -> DataFrame:
-    """(sid, band, sig) bucket rows straight out of ONE Arrow pass:
-    the 128 per-doc MinHash values never leave the Python worker —
-    each doc's 32 band signatures are mixed in numpy (int64
-    wraparound polynomial over the 4 rows per band) and ship as 3
-    narrow columns. Versus materializing a 128-column signature frame
-    and exploding JVM-side, this removes the band explode, the
-    32-struct hash projection, AND the 128-column plan analysis cost
-    — the shuffle carries 3 longs per (doc, band). Bucket ids are an
-    arbitrary deterministic hash (grouping key only); callers needing
-    the raw signatures (the estimator paths) keep using
-    minhash_signatures_maponly."""
-    a_list, b_list = _PERM_A[:_NUM_PERM], _PERM_B[:_NUM_PERM]
+    """(sid, band, sig) bucket rows straight out of ONE Arrow pass
+    with ZERO shuffles: a MinHash signature only depends on its OWN
+    doc's shingles, so it is computed where the doc row already lives
+    (no shingle explode, no exchange). The 128 per-doc MinHash values
+    never leave the Python worker — only the 32 band signatures ship,
+    as 3 narrow columns, so the shuffle downstream carries 3 longs per
+    (doc, band) and no band explode or 128-column plan analysis is
+    paid JVM-side. Callers needing the raw signatures (the estimator
+    path) use minhash_signatures_with_bands_maponly."""
+    kernel = _minhash_kernel(n)
 
     def part(batches):
-        import re
-        import zlib
-
         import numpy as np
         import pandas as pd
 
-        A = np.array(a_list, dtype=np.int64)[None, :]
-        B = np.array(b_list, dtype=np.int64)[None, :]
-        ws = re.compile(r"\s+")
         band_idx = np.arange(_BANDS, dtype=np.int64)
-        MIX = np.int64(1000003)
         for pdf in batches:
-            sids, mins = [], []
-            for sid, txt in zip(pdf[id_col], pdf[text_col]):
-                toks = ws.split(txt.lower())
-                if len(toks) < n:
-                    continue
-                grams = {
-                    " ".join(toks[i: i + n])
-                    for i in range(len(toks) - n + 1)
-                }
-                x = np.fromiter(
-                    (zlib.crc32(g.encode()) & 0x7FFFFFFF for g in grams),
-                    dtype=np.int64,
-                    count=len(grams),
-                )
-                mins.append(((x[:, None] * A + B) % _MERSENNE).min(axis=0))
-                sids.append(sid)
-            if not sids:
+            out = kernel(pdf[id_col], pdf[text_col])
+            if out is None:
                 continue
-            M = np.vstack(mins).reshape(len(sids), _BANDS, _ROWS_PER_BAND)
-            with np.errstate(over="ignore"):
-                sig = M[:, :, 0]
-                for j in range(1, _ROWS_PER_BAND):
-                    sig = sig * MIX + M[:, :, j]
+            sids, _, sig = out
             yield pd.DataFrame(
                 {
-                    "sid": np.repeat(
-                        np.array(sids, dtype=np.int64), _BANDS
-                    ),
+                    "sid": np.repeat(sids, _BANDS),
                     "band": np.tile(band_idx, len(sids)),
                     "sig": sig.reshape(-1),
                 }
@@ -892,6 +755,8 @@ def minhash_band_buckets_maponly(
 
     from dbeam_spark.operators.util import rebalance_for_arrow
 
+    # one parquet file -> one input split: rebalance so the signature
+    # compute parallelizes (no-op at scale, where splits abound)
     return rebalance_for_arrow(
         docs.select(F.col(id_col), F.col(text_col)), min_parts=min_parts
     ).mapInPandas(part, "sid long, band long, sig long")
@@ -903,7 +768,17 @@ def _bucket_groups(buckets: DataFrame, max_bucket: int) -> DataFrame:
     Split out from the pair expansion so a caller can materialize the
     SMALL grouped frame once (only buckets with ≥2 members survive)
     and expand pairs from it more than one way without recomputing
-    the signature pipeline upstream."""
+    the signature pipeline upstream.
+
+    Spark-first shape: ONE shuffle, then pairs expand in place. The
+    bucket self-join formulation shuffles the band rows twice and
+    measured ~2× slower end-to-end at sf0.1 (8.7s → 4.7s for the full
+    minhash pipeline). Pair expansion is quadratic per bucket either
+    way (a join over the same key materializes the same k² rows in one
+    task), so degenerate buckets larger than `max_bucket` — hash
+    collisions over boilerplate shingles, never near-dup clusters that
+    other bands wouldn't also catch — are dropped to bound task size
+    at the 100 TB scale."""
     return (
         buckets.groupBy("band", "sig")
         .agg(F.sort_array(F.collect_list("sid")).alias("ids"))
@@ -912,8 +787,14 @@ def _bucket_groups(buckets: DataFrame, max_bucket: int) -> DataFrame:
 
 
 def _expand_bucket_pairs(grp: DataFrame, distinct: bool) -> DataFrame:
-    """(band, sig, ids) member lists → (id_a, id_b) pairs, in-place
-    capped expansion (see lsh_candidates for the shape rationale)."""
+    """(band, sig, ids) member lists → (id_a, id_b) pairs. `ids` is
+    sorted, so (ids[i], ids[j>i]) already satisfies id_a < id_b. The
+    HOF lambda is interpreted, but it only runs over matched buckets
+    (a few per near-dup cluster), not the full corpus. A J≈0.9 pair
+    collides in ~2/3 of the 32 bands, so the raw pair stream carries
+    ~20× duplicates; `distinct=False` lets a caller that is about to
+    collect anyway dedupe in a set instead of paying a second
+    shuffle."""
     pairs = F.explode(
         F.expr(
             "flatten(transform(ids, (x, i) -> "
@@ -923,60 +804,6 @@ def _expand_bucket_pairs(grp: DataFrame, distinct: bool) -> DataFrame:
     )
     out = grp.select(pairs.alias("p")).select("p.id_a", "p.id_b")
     return out.distinct() if distinct else out
-
-
-def _candidates_from_buckets(
-    buckets: DataFrame, max_bucket: int, distinct: bool
-) -> DataFrame:
-    """(sid, band, sig) bucket rows → (id_a, id_b) candidate pairs:
-    one groupBy collecting each bucket's sorted members, in-place
-    capped pair expansion (see lsh_candidates for the shape
-    rationale)."""
-    return _expand_bucket_pairs(
-        _bucket_groups(buckets, max_bucket), distinct
-    )
-
-
-def lsh_candidates(
-    signatures: DataFrame, max_bucket: int = 1000, distinct: bool = True
-) -> DataFrame:
-    """Band the signature into (_BANDS × _ROWS_PER_BAND) buckets and
-    emit each bucket's member pairs.
-
-    Returns distinct (id_a, id_b) candidate pairs with id_a < id_b.
-
-    Spark-first shape: ONE shuffle — groupBy (band, sig) collecting
-    the bucket's members, then expand pairs in-place. The bucket
-    self-join formulation shuffles the exploded bands twice and
-    measured ~2× slower end-to-end at sf0.1 (8.7s → 4.7s for the full
-    minhash pipeline). Pair expansion is quadratic per bucket either
-    way (a join over the same key materializes the same k² rows in one
-    task), so degenerate buckets larger than `max_bucket` — hash
-    collisions over boilerplate shingles, never near-dup clusters that
-    other bands wouldn't also catch — are dropped to bound task size
-    at the 100 TB scale."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.hash(
-                    *[F.col(f"mh{b * _ROWS_PER_BAND + j}") for j in range(_ROWS_PER_BAND)]
-                ).alias("sig"),
-            )
-            for b in range(_BANDS)
-        ]
-    )
-    buckets = signatures.select(
-        F.col("sid"), F.explode(bands).alias("bd")
-    ).select("sid", F.col("bd.band").alias("band"), F.col("bd.sig").alias("sig"))
-    # ids is sorted, so (ids[i], ids[j>i]) already satisfies id_a < id_b.
-    # The HOF lambda is interpreted, but it only runs over matched
-    # buckets (a few per near-dup cluster), not the full corpus.
-    # A J≈0.9 pair collides in ~2/3 of the 32 bands, so the raw pair
-    # stream carries ~20× duplicates. `distinct=False` lets a caller
-    # that is about to collect anyway dedupe in a set instead of
-    # paying this second shuffle (≈0.3s of the sf0.1 wall).
-    return _candidates_from_buckets(buckets, max_bucket, distinct)
 
 
 def minhash_lsh_pairs(
@@ -993,8 +820,8 @@ def minhash_lsh_pairs(
     exhaustive `ngram_jaccard_pairs` result.
 
     Pipeline shape (each step's cost scales with what it must touch):
-    1. Signatures are computed MAP-ONLY per doc
-       (minhash_signatures_maponly): no shingle explode, no shuffle —
+    1. Band signatures are computed MAP-ONLY per doc
+       (minhash_band_buckets_maponly): no shingle explode, no shuffle —
        the only exchange before candidates is the (band, sig) groupBy
        over |docs|×32 rows.
     2. The candidate pair set is tiny by the bucket-cap construction
@@ -1294,7 +1121,7 @@ def simhash_pairs(
                 .alias("cv"),
             )
         )
-    # Same single-shuffle bucket-group shape as lsh_candidates: explode
+    # Same single-shuffle bucket-group shape as _bucket_groups: explode
     # each fingerprint into its n_chunks (chunk-index, chunk-value)
     # buckets, group, and expand member pairs in place. The previous
     # formulation self-joined the fingerprint table once per chunk
@@ -1349,11 +1176,12 @@ def connected_components(
     O(1) deep instead of O(iterations).
 
     100 TB posture: rounds needed = graph diameter. Near-dup graphs are
-    star-like (diameter ~2-4), so 3-5 shuffles in practice. For
-    pathological chains, switch to the large-star/small-star algorithm
-    (Kiveris et al., "Connected Components in MapReduce"), which
-    converges in O(log^2 n) rounds with the same join-agg primitive —
-    the per-round operator below is deliberately that primitive.
+    star-like (diameter ~2-4), so 3-5 shuffles in practice. A
+    large-star/small-star variant (Kiveris et al., O(log² n) rounds)
+    needed 2 rounds to this one's 4 on dedup_clusters' pair graph at
+    sf0.1 and on its 10× replica, yet was no faster on a 4-core host
+    (medians 1.65 s vs this one's 1.54 s, and 1.44 s vs 1.37 s):
+    per-round job overhead, not round count, dominates shallow graphs.
     """
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -1395,87 +1223,6 @@ def connected_components(
                 break
             prev_sum = cur_sum
     return labels.select(F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id"))
-
-
-def connected_components_twophase(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14): same (doc_id, cluster_id = component-min) contract as
-    `connected_components`, but O(log² n) rounds instead of
-    O(diameter).
-
-    Use this backend when the near-dup graph can contain long chains
-    (transitive text drift, linked-record graphs): label propagation
-    needs one shuffle round per hop of diameter, while each star
-    operation here halves the tree height. Every round is the same
-    groupBy-min + join primitive, so the 100 TB cost model is
-    unchanged — just fewer rounds on pathological graphs.
-
-    large-star: hang every neighbor LARGER than u onto u's minimum;
-    small-star: hang every neighbor SMALLER-OR-EQUAL onto it. Both
-    preserve components; a fixed point is a star per component rooted
-    at its minimum, read off as the label map directly."""
-    edges = (
-        pairs.select(
-            F.greatest(F.col(id_a), F.col(id_b)).alias("src"),
-            F.least(F.col(id_a), F.col(id_b)).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        mins = sym.groupBy("src").agg(F.min("dst").alias("mn")).select(
-            "src", F.least("mn", "src").alias("m")
-        )
-        return (
-            sym.join(mins, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # e is oriented src > dst after large_star's construction
-        mins = e.groupBy("src").agg(F.min("dst").alias("m"))
-        joined = e.join(mins, "src")
-        return (
-            joined.filter(F.col("dst") != F.col("m"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .unionByName(
-                mins.select(F.col("src"), F.col("m").alias("dst"))
-            )
-            .distinct()
-        )
-
-    def sig(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)), F.sum("src"), F.sum("dst")
-        ).collect()[0]
-        return tuple(row)
-
-    prev = sig(edges)
-    for _ in range(max_iter):
-        edges = small_star(large_star(edges)).localCheckpoint()
-        cur = sig(edges)
-        if cur == prev:
-            break
-        prev = cur
-    # fixed point: edges are (member, component_min) stars
-    members = edges.select(
-        F.col("src").alias("doc_id"), F.col("dst").alias("cluster_id")
-    )
-    roots = edges.select(F.col("dst").alias("doc_id")).distinct().withColumn(
-        "cluster_id", F.col("doc_id")
-    )
-    return members.unionByName(roots).distinct()
 
 
 def incremental_minhash_index(

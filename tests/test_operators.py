@@ -52,13 +52,36 @@ def test_minhash_lsh_equals_exhaustive(docs):
     assert lsh == exhaustive
 
 
+def test_minhash_signatures_stable(docs):
+    """incremental_minhash_index compares new docs against signatures
+    persisted by EARLIER runs, so the kernel's values must never
+    drift: pin a digest of the (sid, mh, bands) rows, and check the
+    bucket layout minhash_lsh_pairs bands on is exactly the persisted
+    `bands` array exploded."""
+    import hashlib
+
+    sigs = dedup.minhash_signatures_with_bands_maponly(docs)
+    rows = sorted(
+        (r.sid, list(r.mh), list(r.bands)) for r in sigs.collect()
+    )
+    assert [r[0] for r in rows] == [1, 2, 3, 4, 5]
+    assert all(len(mh) == 128 and len(b) == 32 for _, mh, b in rows)
+    assert hashlib.sha256(repr(rows).encode()).hexdigest() == (
+        "7d807397c0d798b335e643d7da053b05d6693bf32695b6d7690d1eb642941cb9"
+    )
+    exploded = sigs.select("sid", F.posexplode("bands").alias("band", "sig"))
+    buckets = dedup.minhash_band_buckets_maponly(docs)
+    assert sorted(map(tuple, exploded.collect())) == sorted(
+        map(tuple, buckets.select("sid", "band", "sig").collect())
+    )
+
+
 def test_bucket_group_expansion_matches_direct(spark):
     """The split _bucket_groups → _expand_bucket_pairs pipeline (the
-    r9 shared-checkpoint shape inside minhash_lsh_pairs) must equal
-    _candidates_from_buckets on every axis: cap filtering, id_a<id_b
-    ordering, distinct vs raw multiplicity — and expanding from a
-    localCheckpoint'd group frame must be identical to expanding the
-    live one (the fallback regime reads the checkpoint)."""
+    shared-checkpoint shape inside minhash_lsh_pairs) must get every
+    axis right: cap filtering, id_a<id_b ordering, distinct vs raw
+    multiplicity — when expanding from a localCheckpoint'd group
+    frame, as the fallback regime does."""
     # bucket (0,1): ids {1,2,3}; bucket (1,1): ids {2,3} (dup pair
     # across bands); bucket (2,2): 5 ids — dropped by max_bucket=4;
     # bucket (3,3): singleton — dropped by the >1 filter
@@ -69,12 +92,6 @@ def test_bucket_group_expansion_matches_direct(spark):
         + [(99, 3, 3)]
     )
     buckets = spark.createDataFrame(rows, ["sid", "band", "sig"])
-    direct_raw = [
-        (r.id_a, r.id_b)
-        for r in dedup._candidates_from_buckets(
-            buckets, max_bucket=4, distinct=False
-        ).collect()
-    ]
     grp = dedup._bucket_groups(buckets, max_bucket=4)
     ck = grp.localCheckpoint(eager=True)
     split_raw = [
@@ -82,7 +99,7 @@ def test_bucket_group_expansion_matches_direct(spark):
         for r in dedup._expand_bucket_pairs(ck, distinct=False).collect()
     ]
     want_raw = [(1, 2), (1, 3), (2, 3), (2, 3)]  # (2,3) once per band
-    assert sorted(direct_raw) == sorted(split_raw) == want_raw
+    assert sorted(split_raw) == want_raw
     split_distinct = {
         (r.id_a, r.id_b)
         for r in dedup._expand_bucket_pairs(ck, distinct=True).collect()
@@ -281,6 +298,22 @@ def test_rh_lsh_bucket_cap_keeps_lowest_ids(spark):
     assert got == {(a, b) for a in range(4) for b in range(a + 1, 4)}
 
 
+def _union_find_clusters(edges):
+    """node -> min node id of its component, by plain union-find."""
+    parent = {n: n for e in edges for n in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def test_connected_components_chain_and_islands(spark):
     # chain 1-2-3-4 (one component), pair 10-11, and 20-21-22 star
     pairs = spark.createDataFrame(
@@ -292,27 +325,20 @@ def test_connected_components_chain_and_islands(spark):
         for r in dedup.connected_components(pairs).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-
-
-def test_twophase_components_match_label_prop(spark):
-    """large-star/small-star must produce the identical cluster map on
-    chains (its worst-case motivation), stars, and random graphs."""
-    import random
-
-    rng = random.Random(11)
+    # odd and even hop counts straddle the every-second-round
+    # convergence check; the star's min sits at a leaf, not the hub
     cases = [
-        [(i, i + 1) for i in range(1, 30)],            # 29-hop chain
-        [(0, i) for i in range(1, 12)],                # star at 0
-        sorted({tuple(sorted(rng.sample(range(80), 2))) for _ in range(90)}),
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (20, 22)],
+        [(i, i + 1) for i in range(1, 6)],  # 5-hop chain
+        [(i + 1, i) for i in range(1, 7)],  # 6-hop chain, reversed pairs
+        [(50, i) for i in range(40, 50)] + [(50, 60)],  # 11-leaf star
     ]
     for edges in cases:
         pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-        a = {r.doc_id: r.cluster_id
-             for r in dedup.connected_components(pairs).collect()}
-        b = {r.doc_id: r.cluster_id
-             for r in dedup.connected_components_twophase(pairs).collect()}
-        assert a == b
+        got = {
+            r.doc_id: r.cluster_id
+            for r in dedup.connected_components(pairs).collect()
+        }
+        assert got == _union_find_clusters(edges), edges
 
 
 def test_sampling_deterministic(spark):
@@ -601,24 +627,11 @@ def test_connected_components_matches_union_find_random(spark):
     edges = sorted(
         {tuple(sorted(rng.sample(range(60), 2))) for _ in range(70)}
     )
-    parent = list(range(60))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        parent[find(a)] = find(b)
-    nodes = {n for e in edges for n in e}
-    want = {n: min(m for m in nodes if find(m) == find(n)) for n in nodes}
-
     out = dedup.connected_components(
         spark.createDataFrame(edges, ["id_a", "id_b"])
     )
     got = {r.doc_id: r.cluster_id for r in out.collect()}
-    assert got == want
+    assert got == _union_find_clusters(edges)
 
 
 def test_partitioned_materialization_prunes(spark, tmp_path):

@@ -130,11 +130,11 @@ def test_minhash_signatures_parallelize_small_inputs(spark):
     # registered query's returned frame only contains the verify leg
     # — candidates are materialized eagerly — so assert on the
     # signature operator's own plan.)
-    from dbeam_spark.operators.dedup import minhash_signatures_maponly
+    from dbeam_spark.operators.dedup import minhash_band_buckets_maponly
     from dbeam_spark.sources.files import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
-    sig = minhash_signatures_maponly(docs)
+    sig = minhash_band_buckets_maponly(docs)
     plan = sig._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" in plan
     assert "MapInPandas" in plan

@@ -81,62 +81,6 @@ def test_generate_ranges_invariants(min_v, span, parallelism):
 @settings(max_examples=40, deadline=None)
 @given(
     rows=st.lists(
-        st.tuples(_longs, _doubles, _strings, _bools),
-        min_size=1,
-        max_size=60,
-    ),
-)
-def test_vectorized_encoder_matches_scalar(rows):
-    """encode_pdf (numpy fast path) must be byte-identical to the
-    scalar encode_rows for any longs/doubles/strings/bools, including
-    None, NaN via mask, negative varint edges, and unicode."""
-    import numpy as np
-    import pandas as pd
-
-    from dbeam_spark.avro.writer import _normalize_series
-
-    schema = spark_schema_to_avro(
-        T.StructType(
-            [
-                T.StructField("a", T.LongType()),
-                T.StructField("d", T.DoubleType()),
-                T.StructField("s", T.StringType()),
-                T.StructField("b", T.BooleanType()),
-            ]
-        ),
-        "prop",
-    )
-    enc = OcfEncoder(schema, "null")
-    cols = list(map(list, zip(*rows)))
-    scalar = b"".join(enc.encode_rows(cols))
-
-    # pandas frame the way Arrow delivers it: float col holds NaN for
-    # null (mask carries true nullness), object cols hold None
-    mask = pd.Series([v is None for v in cols[1]])
-    pdf = pd.DataFrame(
-        {
-            "a": pd.Series(cols[0], dtype="object"),
-            "d": pd.Series(
-                [float("nan") if v is None else v for v in cols[1]],
-                dtype="float64",
-            ),
-            "s": pd.Series(cols[2], dtype="object"),
-            "b": pd.Series(cols[3], dtype="object"),
-        }
-    )
-    # object-dtype long column exercises the per-column fallback;
-    # ALSO exercise the numpy path when no nulls are present
-    fast = b"".join(enc.encode_pdf(pdf, {"d": mask}))
-    assert fast == scalar
-    if all(v is not None for v in cols[0]):
-        pdf2 = pdf.assign(a=np.array(cols[0], dtype=np.int64))
-        fast2 = b"".join(enc.encode_pdf(pdf2, {"d": mask}))
-        assert fast2 == scalar
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    rows=st.lists(
         st.tuples(
             _longs,
             st.one_of(
@@ -155,8 +99,7 @@ def test_arrow_encoder_matches_scalar(rows):
     """encode_batch (Arrow-buffer fast path) must be byte-identical to
     the scalar encode_rows for longs/doubles/strings/bools/binary,
     including None, real NaN doubles (validity bitmap distinguishes
-    NULL from NaN — the pandas path needed an external mask for this),
-    negative varint edges, and unicode."""
+    NULL from NaN), negative varint edges, and unicode."""
     import pyarrow as pa
 
     schema = spark_schema_to_avro(

@@ -296,3 +296,47 @@ def test_join_completeness_report_matches_batch(spark):
         row.n_unmatched_purchases
         == exp.n_purchases - exp.n_matched_purchases
     )
+
+
+def test_join_completeness_empty_join_input_is_zero(spark, tmp_path):
+    """A corpus with no purchases leaves the outer join's input empty:
+    SQL's SUM over no rows is NULL, so both oracles COALESCE the match
+    count to 0 the way the Spark report does — the all-zero report
+    must agree in both engines. Both queries share
+    _join_completeness_report, so one Spark run (the sampled twin,
+    whose key sample is the likelier one to come up empty) stands for
+    both."""
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbeam_spark.queries import ORACLES, QUERIES
+
+    n = 6
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array(
+                    [datetime.datetime(2024, 1, 1, h) for h in range(n)],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array(range(n), pa.int64()),
+                "event_type": ["view"] * n,
+                "value": [1.0] * n,
+                "props": ["{}"] * n,
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'"
+    )
+    name = "stream_join_completeness_sampled"
+    got = tuple(QUERIES[name](spark, str(tmp_path)).collect()[0])
+    for oracle in (name, "stream_join_completeness"):
+        want = con.execute(ORACLES[oracle]).fetchone()
+        assert got == want == (0, 0, 0, 0), oracle
